@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round benchmark: times every registered query on SPARK_GRAFT_SF_DIR
   * and the headline extraction throughput, printing ONE JSON line.
   *
-  * `value` = total seconds across all queries (the driver's headline);
+  * `value` = total seconds across all queries that ran (the headline
+  * number); failed queries are left out of it, reported on stderr
+  * and listed under "failed" in BENCH/bench_detail.json;
   * extra keys report the north metric (extraction docs/sec) and the
   * scaling-efficiency evidence.
   *
@@ -26,24 +26,25 @@ import org.apache.spark.sql.SparkSession
   *    — if the query section already ate the budget.
   */
 object Bench {
+
+  /** Total seconds over the queries that ran, and the names of those
+    * that failed (`rows` = -1): a failed query's short time must never
+    * make the bench read faster. */
+  def tally(results: Seq[(String, Double, Long)]): (Double, Seq[String]) = {
+    val (ok, failed) = results.partition(_._3 >= 0)
+    (ok.map(_._2).sum, failed.map(_._1))
+  }
+
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores()
     // bound q49's probe sweep at its sf0.01 operating point for bench
     // timing only (Verify/oracle run uncapped; see Similarity.scala)
     System.setProperty("graft.q49.benchProbeCap",
       sys.env.getOrElse("SPARK_GRAFT_Q49_CAP", "12"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // warm the JVM/codegen once on the TARGET dir (excluded from timing);
@@ -70,7 +71,10 @@ object Bench {
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0q = System.nanoTime()
-      val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+      val n = try fn(spark, sfDir).count() catch { case e: Throwable =>
+        System.err.println(s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
+        -1L
+      }
       val sec = (System.nanoTime() - t0q) / 1e9
       // drop any per-query persisted intermediates (q31/q32) so caches
       // never leak memory pressure into the queries after them
@@ -95,7 +99,7 @@ object Bench {
     val nOk = extractSamples.head._2
     val extractSec = extractSamples.map(_._1).min
     val docsPerSec = nPages / extractSec
-    val total = results.map(_._2).sum
+    val (total, failed) = tally(results)
     spark.stop()
 
     // north-rule scaling evidence. Fresh rounds use ScalingBench's r4
@@ -203,6 +207,7 @@ object Bench {
     // full-fidelity detail (long names, per-query row counts, samples)
     val detail =
       s"""{"sf":"$sfDir","cores":$cpus,"total_sec":${f"$total%.3f"},
+         |"failed":[${failed.map(n => s""""$n"""").mkString(",")}],
          |"queries":{${results.map { case (k, v, n) => s""""$k":{"sec":${f"$v%.3f"},"rows":$n}""" }.mkString(",")}},
          |"extract":{"docs_per_sec":${f"$docsPerSec%.1f"},"pages":$nPages,"ok":$nOk,"samples":[${extractSamples.map(s => f"${s._1}%.3f").mkString(",")}]},
          |"scaling":${rep.json},

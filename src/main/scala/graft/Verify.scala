@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,14 +12,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-verify", GraftSession.cores())
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>

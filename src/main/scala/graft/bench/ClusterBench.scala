@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-JVM scaling evidence: the same timed extraction job as
   * [[ScalingBench.runAt]], but submitted via `spark-submit --master
   * local-cluster[N,cores,mem]` so executors are SEPARATE JVM processes
@@ -30,12 +28,7 @@ object ClusterBench {
     val path = args(0)
     val pages = args(1).toLong
     // no .master() here: spark-submit's --master must win
-    val spark = SparkSession.builder()
-      .appName("graft-cluster-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("graft-cluster-bench", 32).getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

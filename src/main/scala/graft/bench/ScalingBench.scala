@@ -3,16 +3,6 @@ package graft.bench
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Single-level run for JVM-flag experiments: ScalingBenchOne <cores> <pages>. */
-object ScalingBenchOne {
-  def main(args: Array[String]): Unit = {
-    val pages = args(1).toLong
-    ScalingBench.prepareCorpus(pages)
-    val r = ScalingBench.runAt(args(0).toInt, pages)
-    println(f"""{"cores":${r.cores},"docs_per_sec":${r.docsPerSec}%.1f,"wall_sec":${r.wallSec}%.2f}""")
-  }
-}
-
 /** Re-render BENCH/BASELINE.md from the stored runs (no benchmarking):
   * ScalingReport [nPages] [lo] [hi]. */
 object ScalingReport {
@@ -131,7 +121,7 @@ object ScalingBench {
   def prepareCorpus(nPages: Long): String = {
     val path = corpusPath(nPages)
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
-      val spark = session(32, "graft-scaling-prep")
+      val spark = session(graft.GraftSession.cores(), "graft-scaling-prep")
       graft.gen.SyntheticCorpus.generate(spark, nPages, partitions = partitions)
         .write.mode("overwrite").parquet(path)
       spark.stop()
@@ -140,14 +130,7 @@ object ScalingBench {
   }
 
   private def session(cores: Int, name: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.local(name, cores)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

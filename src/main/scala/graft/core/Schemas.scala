@@ -61,17 +61,3 @@ final case class ExtractedDoc(
     error: String,
     references: Seq[RefEntry] = Seq.empty
 )
-
-/** Per-partition lineage row appended to the metrics table — the
-  * checkpoint unit for idempotent resume (SURVEY §4.3; reference analog:
-  * running counters at split_htmls_to_pages.py:161-183).
-  */
-final case class PartitionMetrics(
-    partition_id: Int,
-    urls_seen: Long,
-    urls_ok: Long,
-    urls_failed: Long,
-    blocks_kept: Long,
-    blocks_dropped: Long,
-    span_total: Long
-)

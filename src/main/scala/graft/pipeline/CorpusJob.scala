@@ -113,15 +113,7 @@ object CorpusJob {
     val pages = opts.getOrElse("--pages", "synthetic:1000")
     val out = opts.getOrElse("--out",
       sys.error("usage: CorpusJob --pages <spec> --out <dir> [--cores N]"))
-    val cores = opts.getOrElse("--cores", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-corpus")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-corpus", graft.GraftSession.cores(opts.get("--cores")))
     spark.sparkContext.setLogLevel("WARN")
     val s = run(spark, pages, out)
     println(f"[corpus] extract=${s.extract.extracted} skipped=${s.extract.skippedDone} " +

@@ -106,20 +106,11 @@ object ExtractJob {
     val pagesSpec = opts.getOrElse("--pages", "synthetic:10000")
     val outDir = opts.getOrElse("--out", "/tmp/graft_out")
     val nBuckets = opts.getOrElse("--buckets", "8").toInt
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // pages rows are KBs–MBs each; smaller scan splits keep per-task
-      // memory bounded and the heavy tail spread (SURVEY §4.3 spill note)
-      .config("spark.sql.files.maxPartitionBytes", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-extract", graft.GraftSession.cores(opts.get("--cores")))
+    // pages rows are KBs–MBs each; smaller scan splits keep per-task
+    // memory bounded and the heavy tail spread (SURVEY §4.3 spill note)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
     spark.sparkContext.setLogLevel("WARN")
 
     val s = run(spark, pagesSpec, outDir, nBuckets)

@@ -86,17 +86,8 @@ object ScrubJob {
     val outDir = opts.getOrElse("--out", "/tmp/graft_scrubbed")
     val ratio = opts.getOrElse("--ratio", "0.4").toDouble
     val nBuckets = opts.getOrElse("--buckets", "8").toInt
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-scrub")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-scrub", graft.GraftSession.cores(opts.get("--cores")))
     spark.sparkContext.setLogLevel("WARN")
 
     val s = run(spark, inDir, outDir, ratio, nBuckets)

@@ -11,15 +11,15 @@ import org.apache.spark.sql.expressions.Window
   * bit-exact DuckDB oracle — including the candidate-pair generation.
   *
   * Scale notes: exact dedup is one shuffle on the content hash; MinHash/
-  * SimHash signatures are narrow map-only projections (SimHash is one
-  * row-local `aggregate` fold); LSH buckets shuffle on (band, key) — the
+  * SimHash signatures are narrow map-only typed maps (SimHash is one
+  * compiled row-local loop); LSH buckets shuffle on (band, key) — the
   * standard shingle→minhash→band→bucket-join plan; Jaccard verification
   * consumes the LSH buckets as its candidate pairs, so its join fan-out
   * is bounded by bucket size, not block size.
   */
 object Dedup {
 
-  import TextOps.{tokens, wordFeature}
+  import TextOps.tokens
 
   private[queries] val P = 1048573L // < 2^20, keeps band keys in 2^40
   private[queries] val A = Seq(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L)
@@ -67,7 +67,7 @@ object Dedup {
     // spaces only, empties kept) so \t\n\r-padded text shingles
     // identically to the DuckDB oracle's regexp_split_to_array(trim(..));
     // NULL text yields no signature, matching SQL NULL propagation
-    // (mirrors the r3 simhash fix at simhashMixedScala).
+    // (as simhashScala's callers do).
     if (text == null) return None
     val tk = TextOps.tokensScala(text)
     if (tk.length < 3) return None
@@ -161,66 +161,26 @@ object Dedup {
     """.trim)
   )
 
-  /** 16-bit SimHash skeleton: per-bit signed votes over (mixed) word
-    * features, the whole signature one row-local ordered fold — zero
-    * shuffles, zero row blowup. */
-  private def simhashOver(text: Column, mix: Column => Column): Column = {
-    val bits = sequence(lit(0), lit(15))
-    val votes = aggregate(
-      tokens(text),
-      array_repeat(lit(0L), 16),
-      (acc, w) => {
-        val f = mix(wordFeature(w))
-        zip_with(acc, bits, (a, i) => {
-          val p2 = pow(lit(2.0), i).cast("long")
-          val bit = pmod(floor(f.cast("double") / p2).cast("long"), lit(2L))
-          a + when(bit === 1, 1L).otherwise(-1L)
-        })
-      })
-    aggregate(
-      zip_with(votes, bits, (v, i) => when(v > 0, pow(lit(2.0), i).cast("long")).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-  }
+  /** Knuth multiplicative mix applied to word features before banding:
+    * it spreads the raw feature (below 2^9 on real text, so the top
+    * bands would always be 0) over all 16 bits. */
+  private[graft] val knuthMix: Long => Long = f => (f * 2654435761L) % 4294967296L
 
-  /** The q21 signature: votes over the RAW word feature (bit-exactly what
-    * the DuckDB oracle replicates). */
-  private[graft] def simhashCol(text: Column): Column = simhashOver(text, identity)
-
-  /** Banding-grade SimHash for the streaming near-dup filter: word
-    * features pass through a Knuth multiplicative mix first, so all 16
-    * output bits carry signal — the raw q21 feature stays below 2^9, which
-    * leaves the top bands degenerate (always 0) and useless as LSH keys.
-    */
-  private[graft] def simhashMixedCol(text: Column): Column =
-    simhashOver(text, f => pmod(f * lit(2654435761L), lit(4294967296L)))
-
-  /** The 4×4-bit LSH bands of a 16-bit simhash, as an array column —
-    * shared by the batch q42 twin and the streaming band filter. */
-  private[graft] def simhashBands(simhash: Column): Column =
-    array((0 until 4).map(i =>
-      pmod(floor(simhash.cast("double") / math.pow(16, i)).cast("long"), lit(16L))): _*)
-
-  /** Integer-exact Scala twin of [[simhashMixedCol]] for the streaming
-    * hot path, where no persist barrier can stop CollapseProject from
-    * re-evaluating the Column fold once per band element. All arithmetic
-    * is integral (votes, Knuth mix, bit tests), so equality with the
-    * Column version is structural — and EventStreamsSpec asserts the
-    * streamed verdicts equal the batch q42 oracle-backed ones on a
-    * shared corpus. Tokenization goes through [[TextOps.tokensScala]]
-    * (SQL-trim semantics: spaces only, empties kept) so texts with
-    * leading/trailing \t\n\r hash identically to the Column twin.
-    * Non-null input only: the Column twin yields NULL for NULL text
-    * (which no Long can represent) — callers route NULL around this
-    * (EventStreams.bandClaimsStream emits the batch side's
-    * null-band rows directly). */
-  private[graft] def simhashMixedScala(text: String): Long = {
+  /** 16-bit SimHash: per-bit signed votes over `mix`ed word features of
+    * the SQL-tokenized text ([[TextOps.tokensScala]]: spaces trimmed,
+    * empty tokens kept, so \t-padded text hashes as the oracle's
+    * `regexp_split_to_array(trim(text), '\s+')` does). All arithmetic
+    * is integral, so the result is bit-exact with the DuckDB oracles of
+    * q21 (identity mix) and q42 ([[knuthMix]]). Non-null input only:
+    * callers map NULL text to a NULL simhash. A compiled loop: as a
+    * Column fold it would be an interpreted higher-order function over
+    * every token × 16 bits. */
+  private[graft] def simhashScala(text: String, mix: Long => Long): Long = {
     val toks = TextOps.tokensScala(text)
     val votes = new Array[Int](16)
     var t = 0
     while (t < toks.length) {
-      val w = toks(t)
-      val f = TextOps.wordFeatureScala(w)
-      val m = (f * 2654435761L) % 4294967296L
+      val m = mix(TextOps.wordFeatureScala(toks(t)))
       var i = 0
       while (i < 16) {
         if (((m >> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1
@@ -234,6 +194,20 @@ object Dedup {
     sh
   }
 
+  /** `(doc_id, simhash)` over the documents' text, NULL text → NULL. */
+  private def simhashDf(s: SparkSession, docs: DataFrame, mix: Long => Long): DataFrame = {
+    import s.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, t) => (id, Option(t).map(simhashScala(_, mix))) })
+      .toDF("doc_id", "simhash")
+  }
+
+  /** The 4×4-bit LSH bands of a 16-bit simhash, as an array column —
+    * shared by the batch q42 twin and the streaming band filter. */
+  private[graft] def simhashBands(simhash: Column): Column =
+    array((0 until 4).map(i =>
+      pmod(floor(simhash.cast("double") / math.pow(16, i)).cast("long"), lit(16L))): _*)
+
   /** Batch twin of the streaming near-dup band filter (q42): each doc's
     * mixed simhash splits into 4 bands; the FIRST document (min doc_id —
     * the batch stand-in for earliest event time) claims each
@@ -245,23 +219,10 @@ object Dedup {
   val q42BandClaims = QueryDef(
     "q42_band_claims",
     (s, dir) => {
-      import s.implicits._
-      // typed-map twin of simhashMixedCol (bit-identical by construction,
-      // pinned by EventStreamsSpec's streaming/batch agreement): the
-      // Column fold is an interpreted HOF over every token × 16 bits —
-      // measured ~2 s single-threaded at sf0.1 — where the compiled loop
-      // is milliseconds; fanOut spreads the one-split scan first. The
-      // Option[Long] keeps the Column twin's NULL propagation (NULL text
-      // → NULL simhash → 4 NULL band rows), and with the fold gone the
-      // CollapseProject persist barrier is no longer needed.
-      val sh = QueryDef.fanOut(
-          s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text")),
-          "doc_id")
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, if (t == null) None else Some(simhashMixedScala(t)))
-        })
-        .toDF("doc_id", "simhash")
+      // fanOut spreads the one-split scan before the per-row hashing;
+      // NULL text → NULL simhash → 4 NULL band rows, as in the oracle
+      val docs = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val sh = simhashDf(s, QueryDef.fanOut(docs, "doc_id"), knuthMix)
       val claims = sh
         .select(col("doc_id"), posexplode(simhashBands(col("simhash"))).as(Seq("band_idx", "band_val")))
       val w = Window.partitionBy("band_idx", "band_val")
@@ -292,14 +253,12 @@ object Dedup {
     """.trim)
   )
 
-  /** The q21 operator over documents (plan notes on [[simhashCol]]); the
-    * only Exchange in the plan is the final orderBy. */
+  /** SimHash over the RAW word feature per document. Row-local by
+    * design: the only Exchange in the plan is the final orderBy (no
+    * fanOut — PlanAuditSpec forbids a hash exchange here). */
   val q21Simhash = QueryDef(
     "q21_simhash",
-    (s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), simhashCol(col("text")).as("simhash"))
-        .orderBy("doc_id"),
+    (s, dir) => simhashDf(s, s.read.parquet(s"$dir/documents.parquet"), identity).orderBy("doc_id"),
     Some(s"""
       WITH w AS (SELECT doc_id, ${fw("u.w")} AS f
                  FROM documents, unnest(regexp_split_to_array(trim(text), '\\s+')) AS u(w)),
@@ -378,12 +337,6 @@ object Dedup {
       FROM p ORDER BY id1, id2
     """.trim)
   )
-
-  // phase hooks for graft.queries.PhaseProbe (bench tooling only)
-  private[queries] def probePairsWithJaccard(s: SparkSession, dir: String): DataFrame =
-    pairsWithJaccard(s, dupCorpus(s, dir))
-  private[queries] def probeCc(s: SparkSession, dir: String): DataFrame =
-    connectedComponents(verifiedPairs(s, dupCorpus(s, dir), 800L))
 
   /** Verified near-dup edges over a corpus: LSH candidate pairs whose
     * token-set Jaccard clears `jmilliMin` per-mille. */

@@ -14,15 +14,6 @@ final case class QueryDef(
 )
 
 object QueryDef {
-  /** Register parquet dirs as temp views named like the bare tables, so
-    * query bodies can be written once against table names. DuckDB gets
-    * equivalent views from read_parquet (see Verify/driver).
-    */
-  def loadTables(spark: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-    }
-
   /** Spread a SMALL scan across the session's cores before heavy
     * per-row CPU work (extraction, alignment, signature hashing, the
     * external-process pipe). A table that fits one parquet split

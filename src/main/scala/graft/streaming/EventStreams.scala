@@ -106,8 +106,8 @@ object EventStreams {
     // typed map, not Column HOFs: no persist barrier exists on a stream,
     // so CollapseProject would re-evaluate the simhash vote fold once
     // per band element (the q42 batch twin needed a barrier for this);
-    // the Scala twin computes it exactly once per document. NULL text
-    // mirrors the batch twin's Column null semantics: NULL simhash →
+    // the Scala loop computes it exactly once per document. NULL text
+    // mirrors the batch twin's SQL null semantics: NULL simhash →
     // simhashBands yields 4 NULL elements → posexplode emits 4 rows
     // with NULL band_val, so every NULL-text doc competes in the same
     // four NULL buckets (first one claims them, the rest lose) — the
@@ -119,7 +119,7 @@ object EventStreams {
         val bands: IndexedSeq[Option[Long]] =
           if (text == null) IndexedSeq.fill(4)(None)
           else {
-            val sh = graft.queries.Dedup.simhashMixedScala(text)
+            val sh = graft.queries.Dedup.simhashScala(text, graft.queries.Dedup.knuthMix)
             (0 until 4).map(i => Some((sh >> (4 * i)) & 15L))
           }
         bands.zipWithIndex.map { case (bv, i) => (id, ts, i, bv) }
@@ -195,7 +195,7 @@ object EventStreams {
         val bands: IndexedSeq[Option[Long]] =
           if (text == null) IndexedSeq.fill(4)(None)
           else {
-            val sh = graft.queries.Dedup.simhashMixedScala(text)
+            val sh = graft.queries.Dedup.simhashScala(text, graft.queries.Dedup.knuthMix)
             (0 until 4).map(i => Some((sh >> (4 * i)) & 15L))
           }
         bands.zipWithIndex.map { case (bv, i) => (id, i, bv) }
