@@ -75,11 +75,12 @@ object BlockSegmenter {
     def countCandidates(n: DomNode): Int = n match {
       case DomText(_) => 0
       case e: DomElem =>
-        val self = e.tag match {
+        var count = e.tag match {
           case "p" | "h1" | "h2" | "h3" | "h4" | "h5" | "h6" | "li" | "blockquote" | "pre" | "table" => 1
           case _ => 0
         }
-        self + e.children.map(countCandidates).sum
+        e.children.foreach(c => count += countCandidates(c))
+        count
     }
 
     def emit(b: Block, keep: Boolean): Unit =
@@ -399,10 +400,12 @@ object BlockSegmenter {
     e.attr("role").contains("doc-noteref") ||
       e.classes.exists(_.toLowerCase.contains("footnote-ref"))
 
+  private val textAlignRe = java.util.regex.Pattern.compile("text-align\\s*:\\s*(left|center|right)")
+
   private def styleAlign(e: DomElem): Option[String] = {
     val st = e.attrs.getOrElse("style", "").toLowerCase
-    val m = "text-align\\s*:\\s*(left|center|right)".r.findFirstMatchIn(st)
-    m.map(_.group(1))
+    val m = textAlignRe.matcher(st)
+    if (m.find()) Some(m.group(1)) else None
   }
 
   /** Alignment from LaTeXML-style classes (`ltx_align_center` etc.) —
@@ -543,6 +546,13 @@ object BlockSegmenter {
     c == '.' || c == '!' || c == '?' || c == ';' || c == ':' || c == ',' ||
       c == '。' || c == '，' || c == '、' || c == '！' || c == '？'
 
+  /** ASCII char classes for `ParaStats.addText`: bit 0 word char (not
+    * whitespace), bit 1 sentence punctuation. */
+  private val asciiClass: Array[Byte] = Array.tabulate(0x80) { c =>
+    val ch = c.toChar
+    ((if (Character.isWhitespace(ch)) 0 else 1) | (if (isPunct(ch)) 2 else 0)).toByte
+  }
+
   /** Single-walk paragraph statistics — word/link-word counts, punctuation,
     * math presence — with no intermediate string construction (hot path).
     */
@@ -551,17 +561,31 @@ object BlockSegmenter {
     var nonWs = false
     private var inWord = false
     def addText(s: String, inLink: Boolean): Unit = {
+      // counters live in locals (ints, so the ASCII path has no
+      // data-dependent branch: word starts are unpredictable)
+      val tbl = asciiClass
+      var words = 0; var w = if (inWord) 1 else 0; var p = 0; var any = 0
+      val n = s.length
       var i = 0
-      while (i < s.length) {
+      while (i < n) {
         val c = s.charAt(i)
-        if (isCjk(c)) { total += 1; if (inLink) link += 1; inWord = false; nonWs = true }
-        else if (!c.isWhitespace) {
-          if (!inWord) { total += 1; if (inLink) link += 1 }
-          inWord = true; nonWs = true
-          if (isPunct(c)) punct = true
-        } else inWord = false
+        if (c < 0x80) {
+          val k = tbl(c)
+          val wc = k & 1
+          words += wc & (w ^ 1)
+          w = wc; any |= wc; p |= k
+        } else if (isCjk(c)) { words += 1; w = 0; any = 1 }
+        else if (!Character.isWhitespace(c)) {
+          words += w ^ 1
+          w = 1; any = 1
+          if (isPunct(c)) p |= 2
+        } else w = 0
         i += 1
       }
+      total += words; if (inLink) link += words
+      inWord = w == 1
+      if ((p & 2) != 0) punct = true
+      if (any == 1) nonWs = true
     }
     def linkDensity: Double = if (total == 0) 0.0 else link.toDouble / total
   }
@@ -622,7 +646,8 @@ object BlockSegmenter {
       }
       i += 1
     }
-    blocks.zipWithIndex.collect { case (b, k) if keep(k) => b }
+    if (keep.forall(identity)) blocks
+    else blocks.zipWithIndex.collect { case (b, k) if keep(k) => b }
   }
 
   private def findBody(root: DomElem): DomElem = {

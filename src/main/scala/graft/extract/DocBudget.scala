@@ -40,9 +40,16 @@ object DocBudget {
     * expired deadline would poison unrelated work reusing the thread. */
   def clear(): Unit = state.get()(0) = Long.MaxValue
 
+  /** The calling thread's budget, for a loop that ticks it many times:
+    * `tick(current())` once per document saves the per-tick
+    * ThreadLocal read (a probing map lookup on busy Spark task threads). */
+  private[graft] def current(): Array[Long] = state.get()
+
   /** Hot-loop checkpoint: cheap enough for per-token/per-node call sites. */
-  def tick(): Unit = {
-    val a = state.get()
+  def tick(): Unit = tick(state.get())
+
+  /** [[tick]] on the budget [[current]] returned on this thread. */
+  private[graft] def tick(a: Array[Long]): Unit = {
     a(1) += 1
     if ((a(1) & 0x3FFL) == 0L && a(0) != Long.MaxValue && System.nanoTime() > a(0))
       throw new Exhausted

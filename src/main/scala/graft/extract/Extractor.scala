@@ -57,7 +57,10 @@ object Extractor {
       // byte-identical digests are unchanged; then NBSP -> space at
       // ingest, as the reference does on raw html (html2md.py:52,
       // split_htmls_to_pages.py:69)
-      val html = CharsetSniff.decode(sliced).text.replace('\u00A0', ' ')
+      val text = CharsetSniff.decode(sliced).text
+      // String.indexOf(char) is a vectorized intrinsic; replace's own
+      // search for the first NBSP is a plain loop
+      val html = if (text.indexOf('\u00A0') < 0) text else text.replace('\u00A0', ' ')
       extractHtml(url, html, cfg)
     } catch {
       case NonFatal(e) => failure(url, Option(e.getMessage).getOrElse(e.getClass.getSimpleName))

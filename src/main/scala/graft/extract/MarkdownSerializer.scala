@@ -39,6 +39,11 @@ object MarkdownSerializer {
     }
 
     def inl(is: Vector[Inline], spans: Boolean): String = {
+      if (is.isEmpty) return ""
+      if (is.length == 1) is.head match {
+        case ITxt(s) => return collapseWs(s) // a lone text run needs no builder
+        case _ => ()
+      }
       val sb = new java.lang.StringBuilder(64)
       is.foreach {
         case ITxt(s) => sb.append(collapseWs(s))
@@ -382,22 +387,31 @@ object MarkdownSerializer {
     else raw
   }
 
+  /** Whitespace classes of ASCII chars: 0 none, 1 a space, 3 any other
+    * whitespace (bit 0: whitespace, bit 1: never left as is). */
+  private val asciiWs: Array[Byte] = Array.tabulate(0x80) { c =>
+    (if (c == ' ') 1 else if (Character.isWhitespace(c.toChar)) 3 else 0).toByte
+  }
+
   /** Inline-whitespace collapse (HTML rendering semantics); explicit '\n'
     * from <br> survives as a line break.
     */
   private def collapseWs(s: String): String = {
-    // fast path: nothing to collapse (common for short text runs)
+    // fast path: nothing to collapse (common for short text runs); the
+    // scan keeps its flags in ints so ASCII text takes no branch per space
+    val n = s.length
     var k = 0
-    var prevWs = false
-    var dirty = false
-    while (k < s.length && !dirty) {
+    var prevWs = 0
+    var dirty = 0
+    while (k < n && dirty == 0) {
       val c = s.charAt(k)
-      val ws = c.isWhitespace
-      if (ws && (prevWs || c != ' ')) dirty = true
+      val t = if (c < 0x80) asciiWs(c) else if (Character.isWhitespace(c)) 3 else 0
+      val ws = t & 1
+      dirty = ws & ((t >> 1) | prevWs)
       prevWs = ws
       k += 1
     }
-    if (!dirty) return s
+    if (dirty == 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     var pendingNl = false
@@ -405,7 +419,7 @@ object MarkdownSerializer {
     while (i < s.length) {
       val c = s.charAt(i)
       if (c == '\n') { pendingNl = true; pendingSp = false }
-      else if (c.isWhitespace) { if (!pendingNl) pendingSp = true }
+      else if ((c <= ' ' || c >= 0x80) && Character.isWhitespace(c)) { if (!pendingNl) pendingSp = true }
       else {
         if (pendingNl) sb.append('\n') else if (pendingSp) sb.append(' ')
         pendingNl = false; pendingSp = false

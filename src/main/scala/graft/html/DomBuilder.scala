@@ -1,9 +1,7 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Lightweight DOM. Immutable view after build; children ordered.
-  * `children` is an ArraySeq (single array copy at freeze time — Vector
+  * `children` is an ArraySeq (one array copy when the element closes — Vector
   * tree construction was a measurable share of per-doc allocation).
   */
 sealed trait DomNode
@@ -11,7 +9,12 @@ final case class DomText(text: String) extends DomNode
 final case class DomElem(tag: String, attrs: Map[String, String], children: IndexedSeq[DomNode]) extends DomNode {
   def attr(name: String): Option[String] = attrs.get(name)
   def classes: Set[String] =
-    attrs.get("class").map(_.split("\\s+").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+    attrs.get("class").map(DomElem.wsRun.split(_).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+}
+
+object DomElem {
+  /** `String.split("\\s+")` compiles its pattern per call; this is it, once. */
+  private val wsRun = java.util.regex.Pattern.compile("\\s+")
 }
 
 /** Token stream → tree, with WHATWG-subset implied-end-tag handling
@@ -52,49 +55,67 @@ object DomBuilder {
   val defaultMaxDepth = 256
   val defaultMaxNodes = 1 << 20
 
-  private final class Frame(val tag: String, val attrs: Map[String, String]) {
-    val children = new ArrayBuffer[DomNode](4)
-  }
-
   /** Never throws. Always returns a root element ("#root"). */
   def build(tokens: Iterable[HToken],
             maxDepth: Int = defaultMaxDepth,
             maxNodes: Int = defaultMaxNodes): DomElem = {
-    val stack = new ArrayBuffer[Frame](16)
-    stack += new Frame("#root", Map.empty)
+    // open elements, root first: tag, attributes, and where their
+    // children start in `kids`, the one shared stack of pending children
+    var tags = new Array[String](16)
+    var attrs = new Array[Map[String, String]](16)
+    var firstKid = new Array[Int](16)
+    var depth = 1
+    tags(0) = "#root"; attrs(0) = Map.empty
+    var kids = new Array[DomNode](64)
+    var nKids = 0
     var nodes = 0
 
-    def top: Frame = stack(stack.length - 1)
+    def add(node: DomNode): Unit = {
+      if (nKids == kids.length) kids = java.util.Arrays.copyOf(kids, nKids * 2)
+      kids(nKids) = node
+      nKids += 1
+    }
 
-    def freeze(buf: ArrayBuffer[DomNode]): IndexedSeq[DomNode] =
-      if (buf.isEmpty) Vector.empty
-      else scala.collection.immutable.ArraySeq.unsafeWrapArray(buf.toArray)
+    def open(tag: String, a: Map[String, String]): Unit = {
+      if (depth == tags.length) {
+        tags = java.util.Arrays.copyOf(tags, depth * 2)
+        attrs = java.util.Arrays.copyOf(attrs, depth * 2)
+        firstKid = java.util.Arrays.copyOf(firstKid, depth * 2)
+      }
+      tags(depth) = tag; attrs(depth) = a; firstKid(depth) = nKids
+      depth += 1
+    }
+
+    /** The children of the open element at `d`, popped off `kids`. */
+    def children(d: Int): IndexedSeq[DomNode] = {
+      val from = firstKid(d)
+      val cs =
+        if (from == nKids) Vector.empty
+        else scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          java.util.Arrays.copyOfRange(kids, from, nKids))
+      nKids = from
+      cs
+    }
 
     def closeTop(): Unit = {
-      val f = stack.remove(stack.length - 1)
-      top.children += DomElem(f.tag, f.attrs, freeze(f.children))
+      depth -= 1
+      add(DomElem(tags(depth), attrs(depth), children(depth)))
     }
 
     val it = tokens.iterator
     while (it.hasNext && nodes < maxNodes) {
       it.next() match {
         case TextTok(t) =>
-          top.children += DomText(t)
+          add(DomText(t))
           nodes += 1
 
-        case StartTag(name, attrs, selfClosing) =>
-          while (stack.length > 1 && impliedEnd(top.tag, name)) closeTop()
-          val amap = attrs.toMap
-          if (voidTags.contains(name) || selfClosing) {
-            top.children += DomElem(name, amap, Vector.empty)
-            nodes += 1
-          } else if (stack.length >= maxDepth) {
-            top.children += DomElem(name, amap, Vector.empty) // flatten beyond cap
-            nodes += 1
-          } else {
-            stack += new Frame(name, amap)
-            nodes += 1
-          }
+        case StartTag(name, as, selfClosing) =>
+          while (depth > 1 && impliedEnd(tags(depth - 1), name)) closeTop()
+          val amap = attrMap(as)
+          if (voidTags.contains(name) || selfClosing || depth >= maxDepth)
+            add(DomElem(name, amap, Vector.empty)) // beyond the depth cap: flattened
+          else open(name, amap)
+          nodes += 1
 
         case EndTag(name) =>
           // </body> and </html> never close their frames: browsers route
@@ -102,16 +123,23 @@ object DomBuilder {
           // mode), and closing here would silently drop it
           if (name != "body" && name != "html") {
             // find nearest open frame with this tag (skip #root at idx 0)
-            var idx = stack.length - 1
-            while (idx >= 1 && stack(idx).tag != name) idx -= 1
-            if (idx >= 1) while (stack.length > idx) closeTop()
+            var idx = depth - 1
+            while (idx >= 1 && tags(idx) != name) idx -= 1
+            if (idx >= 1) while (depth > idx) closeTop()
           }
         // unmatched end tag: ignored
       }
     }
-    while (stack.length > 1) closeTop()
-    val root = stack(0)
-    DomElem(root.tag, root.attrs, freeze(root.children))
+    while (depth > 1) closeTop()
+    DomElem(tags(0), attrs(0), children(0))
+  }
+
+  /** `as.toMap` without the builder for the common zero- and
+    * one-attribute tags. */
+  private def attrMap(as: List[(String, String)]): Map[String, String] = as match {
+    case Nil => Map.empty
+    case (k, v) :: Nil => new Map.Map1(k, v)
+    case _ => as.toMap
   }
 
   def parse(html: String): DomElem = build(HtmlTokenizer.tokenize(html))

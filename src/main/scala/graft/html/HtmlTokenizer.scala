@@ -1,7 +1,5 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
-
 /** HTML token stream. Text content arrives entity-decoded and
   * control-char-sanitized; tag/attr names are lowercased.
   */
@@ -33,155 +31,223 @@ object HtmlTokenizer {
 
   val defaultMaxTokens = 1 << 20
 
-  def tokenize(html: String, maxTokens: Int = defaultMaxTokens): IndexedSeq[HToken] = {
-    val out = new ArrayBuffer[HToken](256)
-    val n = html.length
-    var i = 0
-    var textStart = 0
+  def tokenize(html: String, maxTokens: Int = defaultMaxTokens): IndexedSeq[HToken] =
+    new Run(html, maxTokens).tokens()
 
-    def flushText(until: Int): Unit =
-      if (until > textStart) {
-        val t = cleanText(Entities.decode(html.substring(textStart, until)))
-        if (t.nonEmpty) out += TextTok(t)
+  /** One tokenizer pass. Parse helpers return their token and leave the
+    * index after the consumed markup in `after`, so no call allocates a
+    * result tuple; tokens collect in a plain array.
+    */
+  private final class Run(html: String, maxTokens: Int) {
+    private val n = html.length
+    private var out = new Array[HToken](256)
+    private var len = 0
+    private var after = 0
+    // attribute scratch of the tag being parsed (first occurrence wins)
+    private val attrNames = new Array[String](MaxAttrs)
+    private val attrValues = new Array[String](MaxAttrs)
+
+    private def emit(t: HToken): Unit = {
+      if (len == out.length) out = java.util.Arrays.copyOf(out, len * 2)
+      out(len) = t
+      len += 1
+    }
+
+    private def flushText(from: Int, until: Int): Unit =
+      if (until > from) {
+        val t = text(html, from, until)
+        if (t.nonEmpty) emit(TextTok(t))
       }
 
-    while (i < n && out.length < maxTokens) {
-      graft.extract.DocBudget.tick() // per-token wall-clock checkpoint
-      val lt = html.indexOf('<', i)
-      if (lt < 0) { flushText(n); i = n; textStart = n }
-      else {
-        // classify what follows '<'
-        val next = if (lt + 1 < n) html.charAt(lt + 1) else ' '
-        if (next == '!') {
-          flushText(lt)
-          if (html.startsWith("<!--", lt)) {
-            val end = html.indexOf("-->", lt + 4)
-            i = if (end < 0) n else end + 3
-          } else if (html.regionMatches(true, lt, "<![CDATA[", 0, 9)) {
-            val end = html.indexOf("]]>", lt + 9)
-            i = if (end < 0) n else end + 3
-          } else { // doctype / bogus markup declaration
-            val end = html.indexOf('>', lt + 2)
-            i = if (end < 0) n else end + 1
-          }
-          textStart = i
-        } else if (next == '?') { // processing instruction → bogus comment
-          flushText(lt)
-          val end = html.indexOf('>', lt + 2)
-          i = if (end < 0) n else end + 1
-          textStart = i
-        } else if (next == '/') {
-          if (lt + 2 < n && isNameStart(html.charAt(lt + 2))) {
-            flushText(lt)
-            val (name, after) = readName(html, lt + 2)
-            val end = html.indexOf('>', after)
-            i = if (end < 0) n else end + 1
-            out += EndTag(name)
+    def tokens(): IndexedSeq[HToken] = {
+      val budget = graft.extract.DocBudget.current()
+      var i = 0
+      var textStart = 0
+      while (i < n && len < maxTokens) {
+        graft.extract.DocBudget.tick(budget) // per-token wall-clock checkpoint
+        val lt = html.indexOf('<', i)
+        if (lt < 0) { flushText(textStart, n); i = n; textStart = n }
+        else {
+          // classify what follows '<'
+          val next = if (lt + 1 < n) html.charAt(lt + 1) else ' '
+          if (next == '!') {
+            flushText(textStart, lt)
+            if (html.startsWith("<!--", lt)) {
+              val end = html.indexOf("-->", lt + 4)
+              i = if (end < 0) n else end + 3
+            } else if (html.regionMatches(true, lt, "<![CDATA[", 0, 9)) {
+              val end = html.indexOf("]]>", lt + 9)
+              i = if (end < 0) n else end + 3
+            } else { // doctype / bogus markup declaration
+              i = skipPast('>', lt + 2)
+            }
             textStart = i
-          } else { // "</3" etc: bogus comment per spec
-            flushText(lt)
-            val end = html.indexOf('>', lt + 2)
-            i = if (end < 0) n else end + 1
+          } else if (next == '?') { // processing instruction → bogus comment
+            flushText(textStart, lt)
+            i = skipPast('>', lt + 2)
             textStart = i
-          }
-        } else if (isNameStart(next)) {
-          flushText(lt)
-          val (tag, after) = parseStartTag(html, lt + 1)
-          i = after
-          textStart = i
-          tag match {
-            case Some(st) =>
-              out += st
+          } else if (next == '/') {
+            flushText(textStart, lt)
+            if (lt + 2 < n && isNameStart(html.charAt(lt + 2))) {
+              val nameEnd = nameEndFrom(lt + 2)
+              emit(EndTag(name(lt + 2, nameEnd)))
+              i = skipPast('>', nameEnd)
+            } else i = skipPast('>', lt + 2) // "</3" etc: bogus comment per spec
+            textStart = i
+          } else if (isNameStart(next)) {
+            flushText(textStart, lt)
+            val st = startTag(lt + 1)
+            i = after
+            textStart = i
+            if (st != null) { // null: truncated tag at EOF, dropped silently
+              emit(st)
               // NB: the self-closing flag is IGNORED for raw-text
               // elements per the HTML spec — <script/> still consumes
               // everything up to </script>
               if (rawSkip.contains(st.name)) {
-                i = skipRawText(html, i, st.name)
-                out += EndTag(st.name)
+                rawEnd(i, st.name)
+                emit(EndTag(st.name))
+                i = after
                 textStart = i
               } else if (rawKeep.contains(st.name)) {
-                val end = findRawEnd(html, i, st.name)
-                val t = cleanText(Entities.decode(html.substring(i, end._1)))
-                if (t.nonEmpty) out += TextTok(t)
-                out += EndTag(st.name)
-                i = end._2
+                val end = rawEnd(i, st.name)
+                val t = text(html, i, end)
+                if (t.nonEmpty) emit(TextTok(t))
+                emit(EndTag(st.name))
+                i = after
                 textStart = i
               }
-            case None => // truncated tag at EOF: drop silently
+            }
+          } else {
+            // lone '<' is literal text; continue scanning after it
+            i = lt + 1
           }
-        } else {
-          // lone '<' is literal text; continue scanning after it
-          i = lt + 1
         }
       }
+      if (len < maxTokens) flushText(textStart, n)
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(java.util.Arrays.copyOf(out, len))
     }
-    if (out.length < maxTokens) flushText(n.min(html.length))
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray)
+
+    /** Index after the next `c` at or after `from`, else the end. */
+    private def skipPast(c: Char, from: Int): Int = {
+      val end = html.indexOf(c, from)
+      if (end < 0) n else end + 1
+    }
+
+    private def nameEndFrom(start: Int): Int = {
+      var i = start
+      while (i < n && isNameChar(html.charAt(i))) i += 1
+      i
+    }
+
+    /** Lowercased tag name. Name chars are ASCII, so `toLowerCase` can
+      * only change a name holding an uppercase letter. */
+    private def name(start: Int, end: Int): String = {
+      val raw = html.substring(start, end)
+      var i = start
+      while (i < end && !(html.charAt(i) >= 'A' && html.charAt(i) <= 'Z')) i += 1
+      if (i < end) raw.toLowerCase else raw
+    }
+
+    /** Parse a start tag whose name begins at `start` (after '<'); `after`
+      * is set to the index after '>'. Returns null on EOF before '>'.
+      */
+    private def startTag(start: Int): StartTag = {
+      val nameEnd = nameEndFrom(start)
+      val tag = name(start, nameEnd)
+      var i = nameEnd
+      var k = 0 // attributes so far
+      var selfClosing = false
+      var done = false
+      while (!done && i < n && k < MaxAttrs) {
+        while (i < n && isWs(html.charAt(i))) i += 1
+        if (i >= n) { after = n; return null }
+        html.charAt(i) match {
+          case '>' => i += 1; done = true
+          case '/' =>
+            if (i + 1 < n && html.charAt(i + 1) == '>') { selfClosing = true; i += 2; done = true }
+            else i += 1
+          case _ =>
+            // attribute name: everything until ws, '=', '>', '/'
+            val aStart = i
+            var plain = true // no char that toLowerCase could change
+            var c = html.charAt(i)
+            while (i < n && !isWs(c) && c != '=' && c != '>' && c != '/') {
+              if ((c >= 'A' && c <= 'Z') || c >= 0x80) plain = false
+              i += 1
+              if (i < n) c = html.charAt(i)
+            }
+            val aName = if (plain) html.substring(aStart, i) else html.substring(aStart, i).toLowerCase
+            while (i < n && isWs(html.charAt(i))) i += 1
+            var aVal = ""
+            if (i < n && html.charAt(i) == '=') {
+              i += 1
+              while (i < n && isWs(html.charAt(i))) i += 1
+              if (i < n && (html.charAt(i) == '"' || html.charAt(i) == '\'')) {
+                val q = html.charAt(i); i += 1
+                val vStart = i
+                val close = html.indexOf(q, i)
+                i = if (close < 0) n else close
+                aVal = html.substring(vStart, i)
+                if (i < n) i += 1
+              } else {
+                val vStart = i
+                while (i < n && !isWs(html.charAt(i)) && html.charAt(i) != '>') i += 1
+                aVal = html.substring(vStart, i)
+              }
+            }
+            if (aName.nonEmpty && !seen(aName, k)) {
+              attrNames(k) = aName
+              attrValues(k) = sanitizeAttr(Entities.decode(aVal, inAttr = true))
+              k += 1
+            }
+        }
+      }
+      if (!done && i >= n) { after = n; return null }
+      after = if (done) i else skipPast('>', i) // attr cap hit: skip to '>'
+      var attrs: List[(String, String)] = Nil
+      while (k > 0) { k -= 1; attrs = (attrNames(k), attrValues(k)) :: attrs }
+      StartTag(tag, attrs, selfClosing)
+    }
+
+    private def seen(aName: String, k: Int): Boolean = {
+      var j = 0
+      while (j < k && attrNames(j) != aName) j += 1
+      j < k
+    }
+
+    /** Content end of a raw-text element: the index of its matching
+      * `</name` (case-insensitive), or the end on EOF. `after` is set to
+      * the index after that end tag's '>'. Only a '<' can start a match,
+      * so the search jumps from one '<' to the next.
+      */
+    private def rawEnd(from: Int, tag: String): Int = {
+      val m = tag.length + 2
+      var lt = html.indexOf('<', from)
+      while (lt >= 0 && lt + m <= n) {
+        if (html.charAt(lt + 1) == '/' && html.regionMatches(true, lt + 2, tag, 0, tag.length)) {
+          val end = lt + m
+          if (end >= n || html.charAt(end) == '>' || isWs(html.charAt(end)) || html.charAt(end) == '/') {
+            after = skipPast('>', end)
+            return lt
+          }
+        }
+        lt = html.indexOf('<', lt + 1)
+      }
+      after = n
+      n
+    }
   }
+
+  /** At most this many attributes are kept per tag; the rest of the tag
+    * is skipped. */
+  private final val MaxAttrs = 64
 
   private def isNameStart(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 
   private def isNameChar(c: Char): Boolean =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
-
-  private def readName(s: String, start: Int): (String, Int) = {
-    var i = start
-    while (i < s.length && isNameChar(s.charAt(i))) i += 1
-    (s.substring(start, i).toLowerCase, i)
-  }
-
-  /** Parse a start tag beginning after '<'. Returns (tag, index-after-'>').
-    * On EOF before '>', returns (None, length).
-    */
-  private def parseStartTag(s: String, start: Int): (Option[StartTag], Int) = {
-    val n = s.length
-    val (name, afterName) = readName(s, start)
-    var i = afterName
-    val attrs = new ArrayBuffer[(String, String)](4)
-    var selfClosing = false
-    var done = false
-    while (!done && i < n && attrs.length < 64) {
-      while (i < n && isWs(s.charAt(i))) i += 1
-      if (i >= n) return (None, n)
-      s.charAt(i) match {
-        case '>' => i += 1; done = true
-        case '/' =>
-          if (i + 1 < n && s.charAt(i + 1) == '>') { selfClosing = true; i += 2; done = true }
-          else i += 1
-        case _ =>
-          // attribute name: everything until ws, '=', '>', '/'
-          val aStart = i
-          while (i < n && !isWs(s.charAt(i)) && s.charAt(i) != '=' && s.charAt(i) != '>' && s.charAt(i) != '/') i += 1
-          val aName = s.substring(aStart, i).toLowerCase
-          while (i < n && isWs(s.charAt(i))) i += 1
-          var aVal = ""
-          if (i < n && s.charAt(i) == '=') {
-            i += 1
-            while (i < n && isWs(s.charAt(i))) i += 1
-            if (i < n && (s.charAt(i) == '"' || s.charAt(i) == '\'')) {
-              val q = s.charAt(i); i += 1
-              val vStart = i
-              while (i < n && s.charAt(i) != q) i += 1
-              aVal = s.substring(vStart, i.min(n))
-              if (i < n) i += 1
-            } else {
-              val vStart = i
-              while (i < n && !isWs(s.charAt(i)) && s.charAt(i) != '>') i += 1
-              aVal = s.substring(vStart, i)
-            }
-          }
-          if (aName.nonEmpty && !attrs.exists(_._1 == aName)) // first occurrence wins
-            attrs += ((aName, sanitizeAttr(Entities.decode(aVal, inAttr = true))))
-      }
-    }
-    if (!done && i >= n) (None, n)
-    else if (!done) { // attr cap hit: skip to '>'
-      val end = s.indexOf('>', i)
-      val after = if (end < 0) n else end + 1
-      (Some(StartTag(name, attrs.toList, selfClosing)), after)
-    } else (Some(StartTag(name, attrs.toList, selfClosing)), i)
-  }
 
   private def isWs(c: Char): Boolean = c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f'
 
@@ -193,35 +259,21 @@ object HtmlTokenizer {
     if (v.indexOf('\uE000') < 0 && v.indexOf('\uE001') < 0) v
     else v.filterNot(c => c == '\uE000' || c == '\uE001')
 
-  /** Find the matching `</name` for a raw-text element; returns index of
-    * the '<' (content end). Tolerates EOF.
+  /** Text token content of `s[from, until)`: entity-decoded, then
+    * `cleanText`. A run with no '&', no control char and no marker char
+    * is its own substring, so it is scanned once and copied once.
     */
-  private def findRawEnd(s: String, from: Int, name: String): (Int, Int) = {
-    val needle = "</" + name
+  private def text(s: String, from: Int, until: Int): String = {
     var i = from
-    while (i < s.length) {
-      val cand = indexOfIgnoreCase(s, needle, i)
-      if (cand < 0) return (s.length, s.length)
-      val after = cand + needle.length
-      if (after >= s.length || s.charAt(after) == '>' || isWs(s.charAt(after)) || s.charAt(after) == '/') {
-        val gt = s.indexOf('>', after)
-        return (cand, if (gt < 0) s.length else gt + 1)
-      }
-      i = cand + 1
-    }
-    (s.length, s.length)
-  }
-
-  private def skipRawText(s: String, from: Int, name: String): Int = findRawEnd(s, from, name)._2
-
-  private def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
-    val n = s.length; val m = needle.length
-    var i = from
-    while (i + m <= n) {
-      if (s.regionMatches(true, i, needle, 0, m)) return i
+    var plain = true
+    while (i < until && plain) {
+      val c = s.charAt(i)
+      if (c < ' ') plain = c == '\n' || c == '\t'
+      else if (c == '&' || c == '\uE000' || c == '\uE001') plain = false
       i += 1
     }
-    -1
+    val raw = s.substring(from, until)
+    if (plain) raw else cleanText(Entities.decode(raw))
   }
 
   /** Normalize newlines; strip C0 controls except \n\t; strip the two

@@ -60,7 +60,13 @@ object ExtractJob {
 
     // stage → metrics → atomic publish
     val staging = TableIO.stagingDir(outDir, batchId)
-    extracted.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    // url and markdown are distinct per row, so parquet's dictionary
+    // attempt on them only hashes every value before falling back to
+    // plain encoding
+    extracted.write.mode("overwrite").partitionBy("bucket")
+      .option("parquet.enable.dictionary#url", "false")
+      .option("parquet.enable.dictionary#markdown", "false")
+      .parquet(staging)
 
     // explicit schema: a fully-resumed run stages zero rows, and an empty
     // parquet dir has nothing to infer from
@@ -84,10 +90,12 @@ object ExtractJob {
     val totals = (mRows.map(_._2).sum, mRows.map(_._4).sum)
 
     // input size: the synthetic spec knows its count, and a parquet
-    // count is footer metadata — never re-run the generation plan
+    // count is footer metadata — never re-run the generation plan. The
+    // count reuses `pages`, whose relation already listed the files and
+    // read the schema
     val inputN =
       if (pagesSpec.startsWith("synthetic:")) pagesSpec.stripPrefix("synthetic:").toLong
-      else spark.read.parquet(pagesSpec).count()
+      else pages.count()
     if (totals._1 == 0) { // fully resumed: nothing to publish
       TableIO.clearStaging(outDir)
       Summary("-", inputN, 0, 0, inputN, (System.nanoTime() - t0) / 1e9)

@@ -23,15 +23,28 @@ object Postprocess {
     * up to (and including) the FIRST copy, then extend the cut forward
     * to the next sentence boundary found in the kept region's tail.
     *
-    * Allocation-free candidate scan (web-scale hot path; the reference is
-    * O(n²) with copies, postprocessing.py:124-133 — SURVEY §7.4 #4): a
-    * period L exists only if the final `minLen` chars recur at n-L-minLen,
-    * so scan positions backwards with fast-failing regionMatches — the
-    * smallest L (first hit from the right) is the fundamental period.
+    * Case-insensitive means equal under `foldTable`, one UTF-16 unit at
+    * a time. The string is folded once into a char array; the candidate
+    * scan then compares plain chars (the reference is O(n²) with copies,
+    * postprocessing.py:124-133 — SURVEY §7.4 #4): a period L exists only
+    * if the final `minLen` chars recur at n-L-minLen, so scan positions
+    * backwards behind a first- and last-char prefilter — the smallest L
+    * (first hit from the right) is the fundamental period.
     */
   def truncateRepetitions(s: String, minLen: Int = 30): String = {
     val n = s.length
     if (n < 2 * minLen) return s
+    val f = new Array[Char](n)
+    s.getChars(0, n, f, 0)
+    var i = 0
+    while (i < n) {
+      val c = f(i)
+      if (c >= 'A' && c <= 'Z') f(i) = (c + 32).toChar
+      else if (c >= 0x80) f(i) = foldTable(c)
+      i += 1
+    }
+    val tail = n - minLen
+    val first = f(tail)
     var p = n - 2 * minLen          // candidate occurrence start (L = n - minLen - p)
     val pMin = n / 2 - minLen       // L ≤ n/2
     var L = -1
@@ -40,21 +53,22 @@ object Postprocess {
     // verifications; after a bounded number of candidates, switch to the
     // exact O(n) Z-array method instead of giving up (no recall loss)
     var attempts = 0
-    while (p >= pMin && p >= 0 && L < 0 && attempts < 64) {
-      if (s.regionMatches(true, p, s, n - minLen, minLen)) {
+    val last = f(n - 1)
+    while (p >= pMin && L < 0 && attempts < 64) {
+      if (f(p) == first && f(p + minLen - 1) == last && foldedEq(f, p, tail, minLen)) {
         attempts += 1
         val cand = n - minLen - p
-        if (s.regionMatches(true, n - cand, s, n - 2 * cand, cand)) L = cand
+        if (n >= 2 * cand && foldedEq(f, n - 2 * cand, n - cand, cand)) L = cand
       }
       if (L < 0) p -= 1
     }
-    if (L < 0 && attempts >= 64) L = exactSuffixPeriod(s, minLen)
+    if (L < 0 && attempts >= 64) L = exactSuffixPeriod(f, minLen)
     if (L < 0) return s
     // extend the periodic region char-wise to its true start: window-
     // granular walking misses one period when the tail is phase-shifted
     // (e.g. a trimmed trailing space), leaving two copies behind
     var start = n - L
-    while (start > 0 && foldEq(s.charAt(start - 1), s.charAt(start - 1 + L))) start -= 1
+    while (start > 0 && f(start - 1) == f(start - 1 + L)) start -= 1
     val keepEnd = start + L // one (possibly phase-shifted) copy
     // sentence-boundary extension (postprocessing.py:70-99 analog): when
     // the kept copy ends mid-sentence (phase shift into the preceding
@@ -77,29 +91,37 @@ object Postprocess {
     s.substring(0, cut).stripTrailing()
   }
 
-  /** Case folding matching String.regionMatches(ignoreCase=true):
-    * upper-then-lower (plain toLowerCase disagrees for e.g. 'I'/'ı'). */
-  private def foldEq(a: Char, b: Char): Boolean = {
-    if (a == b) return true
-    val ua = Character.toUpperCase(a); val ub = Character.toUpperCase(b)
-    ua == ub || Character.toLowerCase(ua) == Character.toLowerCase(ub)
+  /** The case fold of `truncateRepetitions`, for every UTF-16 unit
+    * (128 KiB): upper-then-lower (plain toLowerCase disagrees for e.g.
+    * 'I'/'ı'). A surrogate folds to itself, so supplementary letters
+    * (Deseret, Osage, Adlam) compare case-sensitively. ASCII takes a
+    * fast path in the caller.
+    */
+  private val foldTable: Array[Char] = {
+    val t = new Array[Char](0x10000)
+    var c = 0
+    while (c < 0x10000) {
+      t(c) = Character.toLowerCase(Character.toUpperCase(c.toChar))
+      c += 1
+    }
+    t
   }
 
-  /** Exact smallest case-insensitive suffix period L ∈ [minLen, n/2]
-    * (s ends with two adjacent copies of an L-chunk), via the Z-array of
-    * the reversed folded string — O(n) fallback for candidate-dense
-    * pages where the heuristic scan would be quadratic. Returns -1 if
-    * no period exists.
+  private def foldedEq(f: Array[Char], a: Int, b: Int, len: Int): Boolean = {
+    var k = 0
+    while (k < len && f(a + k) == f(b + k)) k += 1
+    k == len
+  }
+
+  /** Exact smallest suffix period L ∈ [minLen, n/2] of the folded chars
+    * `f` (f ends with two adjacent copies of an L-chunk), via the Z-array
+    * of reversed `f` — O(n) fallback for candidate-dense pages where the
+    * heuristic scan would be quadratic. Returns -1 if no period exists.
     */
-  private def exactSuffixPeriod(s: String, minLen: Int): Int = {
-    val n = s.length
-    val r = new Array[Char](n)
-    var i = 0
-    while (i < n) { // reversed, regionMatches-compatible fold
-      r(i) = Character.toLowerCase(Character.toUpperCase(s.charAt(n - 1 - i)))
-      i += 1
-    }
-    // Z-array: z(k) = lcp(r, r[k..])
+  private def exactSuffixPeriod(f: Array[Char], minLen: Int): Int = {
+    val n = f.length
+    val last = n - 1 // reversed index k reads f(last - k)
+    // Z-array: z(k) = lcp(r, r[k..]) for r = f reversed
     val z = new Array[Int](n)
     var l = 0; var rr = 0
     var k = 1
@@ -107,7 +129,7 @@ object Postprocess {
       if ((k & 0xFFF) == 0) graft.extract.DocBudget.tick() // every 4096 chars
       var zk = 0
       if (k < rr) zk = math.min(rr - k, z(k - l))
-      while (k + zk < n && r(zk) == r(k + zk)) zk += 1
+      while (k + zk < n && f(last - zk) == f(last - k - zk)) zk += 1
       if (k + zk > rr) { l = k; rr = k + zk }
       z(k) = zk
       k += 1
@@ -159,8 +181,9 @@ object Postprocess {
   }
 
   /** Exact similarity when ≥ minSim is achievable, else -1 — O(1) length
-    * reject plus a banded DP capped at the implied distance budget (the
-    * W3 hot path; unbounded levenshtein dominated the profile before).
+    * reject, an O(n) char-histogram reject, then a banded DP capped at the
+    * implied distance budget (the W3 hot path; unbounded levenshtein
+    * dominated the profile before).
     */
   def boundedSim(a: String, b: String, minSim: Double): Double = {
     if (a == b) return 1.0
@@ -168,8 +191,25 @@ object Postprocess {
     if (m == 0) return 1.0
     val budget = (m * (1.0 - minSim)).toInt // sim ≥ minSim ⇔ d ≤ budget
     if (math.abs(a.length - b.length) > budget) return -1.0
+    if (histogramGap(a, b) > 2 * budget) return -1.0
     val d = Distance.levenshtein(a, b, maxDist = budget + 1)
     if (d > budget) -1.0 else 1.0 - d.toDouble / m
+  }
+
+  /** L1 distance between the char histograms of `a` and `b`, chars
+    * bucketed by their low six bits. One edit moves it by at most 2 and
+    * merging buckets only shrinks it, so levenshtein(a, b) ≥ gap / 2.
+    */
+  private def histogramGap(a: String, b: String): Int = {
+    val h = new Array[Int](64)
+    var i = 0
+    while (i < a.length) { h(a.charAt(i) & 63) += 1; i += 1 }
+    i = 0
+    while (i < b.length) { h(b.charAt(i) & 63) -= 1; i += 1 }
+    var gap = 0
+    i = 0
+    while (i < 64) { gap += math.abs(h(i)); i += 1 }
+    gap
   }
 
   final case class SliceRemoval(text: String, slicesRemoved: Int)
@@ -371,80 +411,117 @@ object Postprocess {
   private val pTrailWs = java.util.regex.Pattern.compile("(?m)[ \t]+$")
   private val pBlankSqueeze = java.util.regex.Pattern.compile("\n{3,}")
 
-  /** One-pass feature scan: each boolean gates a regex stage below —
+  /** Gate chars of `Feat`: the only chars whose flags need a per-char
+    * look at their neighbours. Every other char skips the dispatch. */
+  private final val GHash = 1; private final val GDot = 2; private final val GNl = 3
+  private final val GAmp = 4; private final val GBracket = 5; private final val GFootnote = 6
+  private final val GBullet = 7
+  private val gateClass: Array[Byte] = {
+    val t = new Array[Byte](128)
+    t('#') = GHash.toByte; t('.') = GDot.toByte; t('\n') = GNl.toByte; t('&') = GAmp.toByte
+    t('[') = GBracket.toByte; t('F') = GFootnote.toByte; t('-') = GBullet.toByte; t('*') = GBullet.toByte
+    t
+  }
+
+  /** Feature gate: each boolean gates a regex stage below —
     * java.util.regex full-document scans for patterns that cannot match
-    * dominated the execution profile.
+    * dominated the execution profile. Flags that only ask whether a
+    * substring occurs are one `contains` each; the rest come from one
+    * pass that dispatches on the eight gate chars through `gateClass`.
+    * The char before the page counts as '\n' (a page starts a line).
     */
   private final class Feat(s: String) {
     var hash = false; var dotLine = false; var trailWs = false
-    var tripleNl = false; var amp = false; var http = false
-    var bracketEq = false; var beginEnv = false; var tabular = false; var leftmargin = false
-    var endEnv = false; var bulletLine = false; var midBullet = false
+    var tripleNl = false; var amp = false
+    val http: Boolean = s.contains("http")
+    var bracketEq = false
+    val beginEnv: Boolean = s.contains("\\begin{")
+    val tabular: Boolean = beginEnv && s.contains("\\begin{tabular}")
+    var leftmargin = false
+    val endEnv: Boolean = s.contains("\\end{")
+    var bulletLine = false; var midBullet = false
     var footnote = false; var refMarker = false
     // per-heading-line classification: each flag is a conservative
     // superset of its regex's match condition, so the three '#' regexes
     // below run only on documents that can actually match
     var longTitleCand = false; var numHeaderCand = false
     var hashLineCand = false; var hashAfterSpace = false
-    var i = 0
-    var prev = '\n'
-    var prev2 = '\n'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '#' =>
-          hash = true
-          if (prev == '\n') {
-            var j = i
-            while (j < s.length && s.charAt(j) == '#') j += 1
-            var eol = s.indexOf('\n', j)
-            if (eol < 0) eol = s.length
-            // pLongTitle consumes at most 6 '#'s: hashes beyond the sixth
-            // count toward the 100-char title group
-            if (eol - (i + math.min(6, j - i)) >= 100) longTitleCand = true
-            var k = j
-            var only = true
-            while (k < eol && only) {
-              val ch = s.charAt(k)
-              // any whitespace is fine: pHashLine's [#\s]* and Java's
-              // $-before-terminator admit \r, \f, vertical tab
-              if (ch != '#' && !Character.isWhitespace(ch)) only = false
-              k += 1
-            }
-            if (only) hashLineCand = true
-            var m = j
-            while (m < eol && s.charAt(m) == ' ') m += 1
-            if (m < eol && (s.charAt(m).isDigit || s.charAt(m) == '.')) numHeaderCand = true
-          } else if (Character.isWhitespace(prev)) hashAfterSpace = true
-        case '.' => if (prev == '\n') dotLine = true
-        case '\n' =>
-          if (prev == ' ' || prev == '\t') trailWs = true
-          if (prev == '\n' && prev2 == '\n') tripleNl = true
-        case '&' => amp = true
-        case 'h' => if (!http && s.startsWith("http", i)) http = true
-        case '[' => if (prev == '\\') bracketEq = true
-                    else if (!leftmargin && s.startsWith("[leftmargin=*]", i)) leftmargin = true
-                    else if (!footnote && s.startsWith("[FOOTNOTE:", i)) footnote = true
-                    else if (prev == ' ' && prev2 == '*' && i >= 3 && s.charAt(i - 3) == '\n')
-                      refMarker = true
-                    else if (prev == ' ' && prev2 == '*' && i == 2) refMarker = true
-        case 'b' => if (!beginEnv && prev == '\\' && s.startsWith("begin{", i)) {
-          beginEnv = true
-          if (s.startsWith("begin{tabular}", i)) tabular = true
-        } else if (!tabular && prev == '\\' && s.startsWith("begin{tabular}", i)) tabular = true
-        case 'e' => if (!endEnv && prev == '\\' && s.startsWith("end{", i)) endEnv = true
-        case 'F' => if (!footnote && prev == '\n' && s.startsWith("Footnote ", i)) footnote = true
-        case ' ' =>
-          if (prev == '-' || prev == '*') {
-            if (prev2 == '\n') bulletLine = true
-            else if (prev2 == ' ') midBullet = true
-          }
-        case _ => ()
+
+    /** The char at `i`; '\n' before the page, NUL after it. */
+    private def at(i: Int): Char =
+      if (i < 0) '\n' else if (i < s.length) s.charAt(i) else '\u0000'
+
+    private def heading(i: Int): Unit = {
+      var j = i
+      while (j < s.length && s.charAt(j) == '#') j += 1
+      var eol = s.indexOf('\n', j)
+      if (eol < 0) eol = s.length
+      // pLongTitle consumes at most 6 '#'s: hashes beyond the sixth
+      // count toward the 100-char title group
+      if (eol - (i + math.min(6, j - i)) >= 100) longTitleCand = true
+      var k = j
+      var only = true
+      while (k < eol && only) {
+        val ch = s.charAt(k)
+        // any whitespace is fine: pHashLine's [#\s]* and Java's
+        // $-before-terminator admit \r, \f, vertical tab
+        if (ch != '#' && !Character.isWhitespace(ch)) only = false
+        k += 1
       }
-      prev2 = prev; prev = c
-      i += 1
+      if (only) hashLineCand = true
+      var m = j
+      while (m < eol && s.charAt(m) == ' ') m += 1
+      if (m < eol && (s.charAt(m).isDigit || s.charAt(m) == '.')) numHeaderCand = true
     }
-    if (prev == ' ' || prev == '\t') trailWs = true
+
+    private def bracket(i: Int): Unit = {
+      val prev = at(i - 1)
+      if (prev == '\\') bracketEq = true
+      else if (!leftmargin && at(i + 1) == 'l' && s.startsWith("[leftmargin=*]", i)) leftmargin = true
+      else if (!footnote && at(i + 1) == 'F' && s.startsWith("[FOOTNOTE:", i)) footnote = true
+      else if (prev == ' ' && at(i - 2) == '*' && at(i - 3) == '\n') refMarker = true
+    }
+
+    scan()
+
+    private def scan(): Unit = {
+      val table = gateClass
+      val n = s.length
+      var i = 0
+      while (i < n) {
+        val c = s.charAt(i)
+        if (c < 0x80) {
+          val k = table(c)
+          if (k != 0) gate(k, i)
+        }
+        i += 1
+      }
+      if (n > 0 && (s.charAt(n - 1) == ' ' || s.charAt(n - 1) == '\t')) trailWs = true
+    }
+
+    /** The flags a gate char of class `k` at `i` can set. */
+    private def gate(k: Int, i: Int): Unit = (k: @scala.annotation.switch) match {
+      case GHash =>
+        hash = true
+        val prev = at(i - 1)
+        if (prev == '\n') heading(i)
+        else if (Character.isWhitespace(prev)) hashAfterSpace = true
+      case GDot => if (at(i - 1) == '\n') dotLine = true
+      case GNl =>
+        val prev = at(i - 1)
+        if (prev == ' ' || prev == '\t') trailWs = true
+        else if (prev == '\n' && at(i - 2) == '\n') tripleNl = true
+      case GAmp => amp = true
+      case GBracket => bracket(i)
+      case GFootnote =>
+        if (!footnote && at(i - 1) == '\n' && s.startsWith("Footnote ", i)) footnote = true
+      case _ => // GBullet: '-'/'*' followed by a space
+        if (at(i + 1) == ' ') {
+          val prev = at(i - 1)
+          if (prev == '\n') bulletLine = true
+          else if (prev == ' ') midBullet = true
+        }
+    }
   }
 
   /** Test hook: the '#'-regex gate flags (longTitle, numHeader, hashLine,
@@ -452,6 +529,15 @@ object Postprocess {
   private[post] def headingGates(s: String): (Boolean, Boolean, Boolean, Boolean) = {
     val f = new Feat(s)
     (f.longTitleCand, f.numHeaderCand, f.hashLineCand, f.hashAfterSpace)
+  }
+
+  /** Test hook: all nineteen gate flags, in declaration order. */
+  private[post] def gateFlags(s: String): IndexedSeq[Boolean] = {
+    val f = new Feat(s)
+    IndexedSeq(f.hash, f.dotLine, f.trailWs, f.tripleNl, f.amp, f.http, f.bracketEq,
+      f.beginEnv, f.tabular, f.leftmargin, f.endEnv, f.bulletLine, f.midBullet,
+      f.footnote, f.refMarker, f.longTitleCand, f.numHeaderCand, f.hashLineCand,
+      f.hashAfterSpace)
   }
 
   def postprocessSingle(md0: String, markdownFix: Boolean = true): Result = {

@@ -72,4 +72,14 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(s.extracted == 10)
     assert(TableIO.readData(spark, out).get.count() == 60)
   }
+
+  test("parquet input: input counts the pages table, a re-run skips every page") {
+    val pagesDir = tmp() + "/pages"
+    graft.gen.SyntheticCorpus.generate(spark, 90).write.parquet(pagesDir)
+    val out = tmp()
+    val s1 = ExtractJob.run(spark, pagesDir, out)
+    assert(s1.input == 90 && s1.extracted == 90 && s1.skippedDone == 0)
+    val s2 = ExtractJob.run(spark, pagesDir, out)
+    assert(s2.input == 90 && s2.extracted == 0 && s2.skippedDone == 90)
+  }
 }
